@@ -7,7 +7,7 @@ import org.apache.spark.sql.graft.StreamingShim
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampType}
 
-import graft.vt.DeltaLogReader
+import graft.vt.{BoundedCache, DeltaLogReader}
 
 /** Structured Streaming over a FOREIGN Delta table's change data feed —
   * `spark.readStream.format("delta-cdf").option("path", root).load()`
@@ -123,7 +123,7 @@ object DeltaChanges {
     * CDF columns, in that order. */
   private[sources] def feedSchema(spark: SparkSession, tableRoot: String): StructType = {
     val head = DeltaLogReader.latestVersion(tableRoot)
-    schemaCache.get(tableRoot) match {
+    schemaCache.peek(tableRoot) match {
       case Some((v, s)) if v == head => s
       case _ =>
         val s = DeltaLogReader.snapshot(tableRoot, None, Some(spark)).schema

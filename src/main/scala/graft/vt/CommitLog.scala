@@ -54,11 +54,13 @@ final case class Commit(
     strStats: Map[String, Map[String, (String, String)]] = Map.empty,
     /** DELETION VECTORS (Delta DV / Iceberg v2 position deletes): table-root-
       * relative parquet paths, each holding `(fk STRING, pos BIGINT)` rows —
-      * the file key (last two path segments) and 0-based physical row index
-      * of every MERGE-ON-READ-deleted row. The snapshot's live rows are
-      * `files` minus the union of its dvFiles; readers apply them as one
-      * broadcast anti-join ([[VersionedTable.readCommit]]). Absent = empty =
-      * pure copy-on-write history (back-compatible JSON). */
+      * the file key (last two path segments, URI-escaped as the scan's
+      * `_metadata.file_path` reports them: [[VersionedTable.fileKey]]) and
+      * 0-based physical row index of every MERGE-ON-READ-deleted row. The
+      * snapshot's live rows are `files` minus the union of its dvFiles;
+      * readers apply them as one broadcast anti-join
+      * ([[VersionedTable.readCommit]]). Absent = empty = pure copy-on-write
+      * history (back-compatible JSON). */
     dvFiles: Vector[String] = Vector.empty,
     /** Per-file physical row counts (Delta's `numRecords`). Filled by publish
       * from the parent's map plus one footer read per NEW file, so

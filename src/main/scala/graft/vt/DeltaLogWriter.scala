@@ -348,16 +348,13 @@ object DeltaLogWriter {
       val needed = spark.sparkContext.broadcast(byFk.keySet)
       val rootStr = vt.root.toString
       val inlineMax = InlineDvMax
-      var dv = spark.read.schema(VersionedTable.DvParquetSchema)
-        .parquet(c.dvFiles.map(f => vt.root.resolve(f).toString): _*)
-        .select("fk", "pos")
-      // pre-shuffle prune when the needed set is small (the incremental
-      // re-export case); the post-shuffle broadcast lookup filters exactly
-      // either way
-      if (byFk.size <= 1000)
-        dv = dv.where(org.apache.spark.sql.functions.col("fk")
-          .isInCollection(byFk.keySet))
-      val rows = dv
+      // pre-shuffle prune to the needed keys' range (the same restriction
+      // as VersionedTable.dvStatsByKey); the post-shuffle broadcast lookup
+      // filters exactly
+      val rows = VersionedTable.dvInKeyRange(
+          spark.read.schema(VersionedTable.DvParquetSchema)
+            .parquet(c.dvFiles.map(f => vt.root.resolve(f).toString): _*)
+            .select("fk", "pos"), byFk.keys)
         .repartition(org.apache.spark.sql.functions.col("fk"))
         .sortWithinPartitions("fk", "pos")
         .mapPartitions { it =>

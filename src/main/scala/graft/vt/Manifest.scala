@@ -31,9 +31,12 @@ final case class ManifestEntry(
   * ([[Commit.manifests]]), an append writes ONE new manifest for its new
   * files and reuses the parent's untouched manifests BY REFERENCE, and
   * [[VersionedTable.loadCommit]] resolves the references back into the
-  * in-memory [[Commit]] through a bounded process-wide cache — so the
-  * commit record is O(changed files) and `open()` parses each shared
-  * manifest once per process, not once per commit.
+  * in-memory [[Commit]] through two bounded process-wide caches — parsed
+  * manifests ([[cached]]) and whole resolved manifest lists
+  * ([[VersionedTable.resolvedLists]]) — so the commit record is O(changed
+  * files), `open()` parses each shared manifest once per process, not once
+  * per commit, and the O(files) per-file maps of a manifest list are built
+  * once per process, not once per `loadCommit`.
   *
   * The r19 bloom sidecar ([[BloomIndex]]) proved the pattern; manifests are
   * the same contract for the file list itself. Like sidecars they are
@@ -119,8 +122,8 @@ object Manifest {
   // Bounded process-wide cache keyed by absolute manifest path: manifests
   // are immutable once published and the same manifest is referenced by
   // every descendant commit, so lineage walks and repeated `open()`s share
-  // one parsed copy.
-  private val cache = new BoundedCache[String, Vector[ManifestEntry]](512)
+  // one parsed copy. A miss is one decode.
+  private[graft] val cache = new BoundedCache[String, Vector[ManifestEntry]](512)
 
   def cached(path: Path): Vector[ManifestEntry] =
     cache.get(path.toAbsolutePath.toString)(read(path))

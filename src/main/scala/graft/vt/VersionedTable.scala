@@ -86,23 +86,35 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     * manifest-list order, which [[buildManifests]] made identical to the
     * order publish saw — become the in-memory `files` list and per-file
     * stats maps. Everything downstream (scans, pruning, diff, merge, CDC,
-    * vacuum) keeps seeing a fully materialized [[Commit]]; the resolution
-    * is cheap because immutable manifests parse once per process
-    * ([[Manifest.cached]]). Legacy inline commits pass through untouched. */
+    * vacuum) keeps seeing a fully materialized [[Commit]]. Building those
+    * maps is O(files), so the result is memoized per process by the
+    * commit's absolute manifest paths ([[VersionedTable.resolvedLists]]):
+    * manifests are write-once and UUID-named (the invariant
+    * [[Manifest.cached]] relies on), so one list always resolves to the
+    * same snapshot. A second `head()` of an unchanged branch, a
+    * deletion-vector commit (its parent's list) and the parents of a
+    * time-travel walk cost a lookup, not a rebuild; the commit record
+    * itself is still read and parsed on every call. Legacy inline
+    * commits pass through untouched. */
   private def resolveManifests(c: Commit): Commit =
     if (c.manifests.isEmpty) c
     else {
-      val entries = c.manifests.flatMap(m => Manifest.cached(root.resolve(m)))
-      c.copy(
-        files = entries.map(_.file),
-        stats = entries.iterator.filter(_.stats.nonEmpty)
-          .map(e => e.file -> e.stats).toMap,
-        strStats = entries.iterator.filter(_.strStats.nonEmpty)
-          .map(e => e.file -> e.strStats).toMap,
-        rowCounts = entries.iterator.flatMap(e => e.rows.map(e.file -> _)).toMap,
-        nullStats = entries.iterator.filter(_.nulls.nonEmpty)
-          .map(e => e.file -> e.nulls).toMap,
-        fileSizes = entries.iterator.flatMap(e => e.size.map(e.file -> _)).toMap)
+      val paths = c.manifests.map(m => root.resolve(m).toAbsolutePath.toString)
+      val r = VersionedTable.resolvedLists.get(paths) {
+        val entries = paths.flatMap(p => Manifest.cached(Paths.get(p)))
+        VersionedTable.ResolvedList(
+          files = entries.map(_.file),
+          stats = entries.iterator.filter(_.stats.nonEmpty)
+            .map(e => e.file -> e.stats).toMap,
+          strStats = entries.iterator.filter(_.strStats.nonEmpty)
+            .map(e => e.file -> e.strStats).toMap,
+          rowCounts = entries.iterator.flatMap(e => e.rows.map(e.file -> _)).toMap,
+          nullStats = entries.iterator.filter(_.nulls.nonEmpty)
+            .map(e => e.file -> e.nulls).toMap,
+          fileSizes = entries.iterator.flatMap(e => e.size.map(e.file -> _)).toMap)
+      }
+      c.copy(files = r.files, stats = r.stats, strStats = r.strStats,
+        rowCounts = r.rowCounts, nullStats = r.nullStats, fileSizes = r.fileSizes)
     }
 
   def head(branch: String): Option[Commit] = {
@@ -536,17 +548,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     }
   }
 
-  /** Per-file min/max stats for `cols`, computed in ONE Spark job over the
-    * just-written files (grouped by input_file_name) — the commit-log
-    * equivalent of Delta's data-skipping stats. At 100 TB you would read
-    * parquet footers instead of rescanning; one extra columnar scan of the
-    * fresh files keeps this dependency-free and exact.
-    *
-    * STRING columns keep their min/max as strings (second map), compared at
-    * prune time as unsigned UTF-8 bytes — the SAME ordering Spark's min/max
-    * computed them under (see [[readWhereString]]) — Delta records string
-    * stats too; a time/tenant-keyed lake skips on them constantly. Other
-    * columns are cast to double as before. */
   /** `input_file_name()` yields a percent-encoded URI (`file:///…%20…`):
     * decode it before relativizing against `root`, or a table root containing
     * a URI-escaped character (space, `#`, …) matches NO commit-log entry and
@@ -558,6 +559,11 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     root.relativize(p).toString
   }
 
+  /** Per-file min/max and null counts for `cols` over just-written files —
+    * the commit-log equivalent of Delta's data-skipping stats — from the
+    * parquet footers, or one Spark job when a footer cannot prove them.
+    * STRING columns keep string min/max (second map), compared as unsigned
+    * UTF-8 bytes; other columns are cast to double. */
   private def collectFileStats(spark: SparkSession, files: Vector[String],
                                cols: Seq[String], schema: StructType)
       : (Map[String, Map[String, (Double, Double)]],
@@ -2918,30 +2924,31 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
     * and which DV parquet part-files say so": per-file-key DISTINCT
     * deleted-position counts PLUS the set of DV part-file paths mentioning
     * the key, from one distributed aggregate over the snapshot's DV
-    * parquet, restricted to `keys` (dead entries for rewritten-away files
-    * drop out; duplicated (fk,pos) entries across DV files — merged
-    * branches deleting the same base row — mark ONE row). The driver
-    * receives O(files-with-deletions) rows — counts and path lists, never
-    * positions. Feeds [[countRows]], the native MOR scan's statistics /
-    * columnar / per-task-load routing, and the SQL `COUNT(*)` metadata
-    * answer ([[graft.sources.VtMorScanBuilder]]) — a future DV-semantics
-    * change lands in all of them at once. The path set is what lets each
-    * MOR task open ONLY the DV part-files that mention its key: on a long
-    * delete history a task pays footer reads for its own deletes' files,
-    * not every delete ever made. */
+    * parquet, restricted to `keys` ([[VersionedTable.fileKey]] form; dead
+    * entries for rewritten-away files drop out; duplicated (fk,pos)
+    * entries across DV files — merged branches deleting the same base row
+    * — mark ONE row). The driver receives O(files-with-deletions) rows —
+    * counts and path lists, never positions. Feeds [[countRows]], the
+    * native MOR scan's statistics / columnar / per-task-load routing, and
+    * the SQL `COUNT(*)` metadata answer
+    * ([[graft.sources.VtMorScanBuilder]]) — a future DV-semantics change
+    * lands in all of them at once. The path set is what lets each MOR task
+    * open ONLY the DV part-files that mention its key: on a long delete
+    * history a task pays footer reads for its own deletes' files, not
+    * every delete ever made.
+    *
+    * The scan is restricted to the key RANGE of `keys` below the aggregate
+    * ([[VersionedTable.dvInKeyRange]]): a point read still prunes DV row
+    * groups down to its own key, and a whole-snapshot count plans two
+    * comparisons instead of an IN list of every live key. The exact `keys`
+    * filter runs on the driver over the aggregated rows. */
   private[graft] def dvStatsByKey(spark: SparkSession, c: Commit,
                                   keys: Set[String])
       : Map[String, (Long, Seq[String])] = {
     import org.apache.spark.sql.functions.{col, collect_set, count_distinct, input_file_name}
-    if (c.dvFiles.isEmpty) Map.empty
-    else spark.read.schema(VersionedTable.DvParquetSchema)
-      .parquet(c.dvFiles.map(f => root.resolve(f).toString): _*)
-      // restrict to the CALLER'S keys BELOW the aggregate (isInCollection
-      // compiles to an InSet hash probe, and the DV parquet is sorted by
-      // fk so row-group stats skip non-matching groups): a point read on a
-      // heavily-deleted table must collect O(its files), not one row +
-      // path set per file-with-deletions table-wide
-      .where(col("fk").isInCollection(keys))
+    if (c.dvFiles.isEmpty || keys.isEmpty) Map.empty
+    else VersionedTable.dvInKeyRange(spark.read.schema(VersionedTable.DvParquetSchema)
+        .parquet(c.dvFiles.map(f => root.resolve(f).toString): _*), keys)
       // input_file_name() materializes BELOW the aggregate (Catalyst
       // refuses non-deterministic expressions inside aggregate arguments)
       .select(col("fk"), col("pos"), input_file_name().as("__src"))
@@ -2949,6 +2956,7 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
       .agg(count_distinct(col("pos")).as("n"),
         collect_set(col("__src")).as("srcs"))
       .collect().iterator
+      .filter(r => keys(r.getString(0)))
       .map { r =>
         // input_file_name() yields percent-encoded URIs — decode to plain
         // filesystem paths (same trap [[inputFileToRel]] documents)
@@ -2958,7 +2966,6 @@ final class VersionedTable private (val root: Path, val store: MetaStore) {
         }
         r.getString(0) -> (r.getLong(1), srcs)
       }
-      .filter { case (k, _) => keys(k) }
       .toMap
   }
 
@@ -4268,6 +4275,26 @@ object VersionedTable {
     * the dominant commit-path driver cost before r21). Immutable use only. */
   private[vt] lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
+  /** The per-file fields one manifest list resolves to
+    * ([[VersionedTable.resolveManifests]]). */
+  private[graft] final case class ResolvedList(
+      files: Vector[String],
+      stats: Map[String, Map[String, (Double, Double)]],
+      strStats: Map[String, Map[String, (String, String)]],
+      rowCounts: Map[String, Long],
+      nullStats: Map[String, Map[String, Long]],
+      fileSizes: Map[String, Long])
+
+  /** Resolved manifest lists, keyed by the absolute manifest paths in list
+    * order. One entry holds five per-file maps over the snapshot's files;
+    * their keys and stats values are shared with [[Manifest.cached]]'s
+    * entries, so an entry costs about 150 bytes of heap per file (2.8 MB at
+    * 18.8k files on a 64-bit JVM with compressed oops). 16 entries cover the
+    * distinct lists of a few dozen commits when most commits are deletes
+    * (which keep their parent's list), so time travel within that window
+    * stays a lookup per parent. */
+  private[graft] val resolvedLists = new BoundedCache[Vector[String], ResolvedList](16)
+
   /** Footer metadata cache, keyed by (path, size, mtime) — data files are
     * immutable once written (UUID'd directory names), but a few artifacts
     * (cdc files) reuse deterministic names across re-exports, so the key
@@ -4561,11 +4588,41 @@ object VersionedTable {
   private[vt] val FkCol = "__graft_fk"
   private[vt] val PosCol = "__graft_pos"
 
-  /** File identity key: the last two path segments (uuid'd commit dir + part
-    * file) — unique per file, scheme/root-independent, the same key the
-    * scan-side `concat_ws("/", slice(split(file_path, "/"), -2, 2))`
-    * computes. Used by change feeds and deletion vectors. */
-  private[graft] def fileKey(rel: String): String = rel.split('/').takeRight(2).mkString("/")
+  /** File identity key of a commit-relative path: its last two segments
+    * (uuid'd commit dir + part file) EXACTLY as Spark's scan reports them.
+    * `_metadata.file_path` and `input_file_name()` are URI-escaped — a file
+    * of branch `dev x` scans as `dev%20x-v1-…/part-…` — and deletion-vector
+    * parquet stores `fk` in that form, so this escapes the same way Hadoop's
+    * `Path.toUri` does (names of plain characters pass through unchanged).
+    * Unique per file and scheme/root-independent: the one key change feeds,
+    * deletion vectors, MOR routing, DML touched-file detection and the Delta
+    * export match the scan-side
+    * `concat_ws("/", slice(split(file_path, "/"), -2, 2))` against. */
+  private[graft] def fileKey(rel: String): String = {
+    val k = rel.split('/').takeRight(2).mkString("/")
+    if (k.forall(c => c < 128 && (c.isLetterOrDigit || "/-._=".indexOf(c) >= 0))) k
+    else new java.net.URI(null, null, "/" + k, null, null).getRawPath.substring(1)
+  }
+
+  /** Restrict a deletion-vector parquet frame to the RANGE of file keys
+    * `keys` spans — [min, max] in Spark's binary string order. Two
+    * comparisons, so the plan stays O(1) in the number of keys (an IN list
+    * of every live key cost Catalyst O(snapshot) work on each call), and
+    * parquet row-group stats still prune on them: DV parquet is sorted by
+    * (fk, pos), so a point read skips every other file's DV groups. The
+    * range is not exact; callers keep an exact `keys` filter. `keys` must
+    * be non-empty. */
+  private[vt] def dvInKeyRange(dv: DataFrame, keys: Iterable[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val bytes = keys.iterator.map(_.getBytes(utf8))
+    val first = bytes.next()
+    val (lo, hi) = bytes.foldLeft((first, first)) { case ((l, h), b) =>
+      (if (java.util.Arrays.compareUnsigned(b, l) < 0) b else l,
+        if (java.util.Arrays.compareUnsigned(b, h) > 0) b else h)
+    }
+    dv.where(col("fk").between(new String(lo, utf8), new String(hi, utf8)))
+  }
 
   // ---- per-file bloom filter index (Delta's bloom filter index) ----------
   // Point-lookup skipping for scattered high-cardinality STRING keys

@@ -261,6 +261,29 @@ class DeltaLogSpec extends SparkSpec {
       .select("k").as[Long].collect().sorted === Array(4L))
   }
 
+  test("exportDeltaLog keeps the DVs of files whose key needs URI escaping") {
+    val vt = VersionedTable.create(Tables.scratch("delta_export_dv_escaped"))
+    vt.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), "main", "v0")
+    vt.createBranch("dev x")
+    vt.write(Seq((5L, "e"), (6L, "f")).toDF("k", "v").coalesce(1), "dev x", "v1",
+      mode = "append")
+    vt.deleteWithVectors(spark, "k = 5", "dev x")
+    vt.merge("dev x", "main")
+    assert(vt.exportDeltaLog("main") === 2)
+    val dvAdds = actions(vt.root, 2).filter(a =>
+      a.has("add") && a.get("add").has("deletionVector"))
+    assert(dvAdds.size === 1, "the escaped-key file must carry its DV descriptor")
+    assert(dvAdds.head.get("add").get("deletionVector").get("cardinality").asLong() === 1L)
+    (0L to 2L).foreach { v =>
+      assert(DeltaLogReader.read(spark, vt.root.toString, Some(v))
+        .collect().map(_.toString).sorted ===
+        vt.readVersion(spark, "main", v).collect().map(_.toString).sorted,
+        s"DV version $v replay mismatch")
+    }
+    assert(DeltaLogReader.read(spark, vt.root.toString, None)
+      .select("k").as[Long].collect().sorted === Array(1L, 2L, 6L))
+  }
+
   test("exportDeltaLog emits typed per-file stats; checkpoints carry them through pruning") {
     val vt = VersionedTable.create(Tables.scratch("delta_export_stats"))
     val data = Seq((1L, "apple", 0.5), (2L, "pear", 1.5), (3L, "fig", 2.5),

@@ -55,6 +55,48 @@ class ManifestSpec extends SparkSpec {
     assert(vt.countRows(spark) === 410, "metadata COUNT through manifests")
   }
 
+  test("resolved manifest lists are memoized: repeat heads, DV commits and time-travel walks resolve once") {
+    val src = VersionedTable.create(Tables.scratch("mf_memo_src"))
+    src.write((1 to 40).map(i => (i.toLong, s"v$i")).toDF("k", "v").repartition(4),
+      "main", "v0", statsCols = Seq("k"))
+    (1 to 4).foreach { i =>
+      src.write(Seq((100L + i, s"a$i")).toDF("k", "v").coalesce(1), "main", s"a$i",
+        mode = "append", statsCols = Seq("k"))
+    }
+    val dvc = src.deleteWithVectors(spark, "k = 3")
+    assert(dvc.manifests === src.loadCommit(dvc.parent.get).manifests,
+      "a deletion-vector commit keeps its parent's manifest list")
+    // a byte copy of the table has new absolute manifest paths: both
+    // process-wide caches start cold for it
+    val copyRoot = java.nio.file.Paths.get(Tables.scratch("mf_memo_copy"))
+    val walk = Files.walk(src.root)
+    try walk.forEach { p =>
+      val dst = copyRoot.resolve(src.root.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    } finally walk.close()
+    val vt = VersionedTable.open(copyRoot.toString)
+    val memo = VersionedTable.resolvedLists
+    def counts = (memo.hits, memo.misses, Manifest.cache.misses)
+    // time travel from the v5 head to v0 walks six commits over five
+    // distinct manifest lists (v5's is v4's) built from five manifests
+    val (h0, m0, d0) = counts
+    assert(vt.readVersion(spark, "main", 0).count() === 40)
+    val (h1, m1, d1) = counts
+    assert(m1 - m0 === 5, "each distinct manifest list resolves exactly once")
+    assert(h1 - h0 >= 1, "the DV commit resolves from its parent's entry")
+    assert(d1 - d0 === 5, "each manifest decodes exactly once")
+    // a second head() of the unchanged branch is one hit and decodes nothing
+    val head = vt.head("main").get
+    assert(counts === ((h1 + 1, m1, d1)))
+    assert(vt.loadCommit(head.id) == head)
+    assert(head.files.size === 8 && head.rowCounts.size === 8)
+    // so is the DV commit's own resolution and a repeat of the whole walk
+    assert(vt.loadCommit(dvc.id).files === vt.loadCommit(dvc.parent.get).files)
+    assert(vt.readVersion(spark, "main", 0).count() === 40)
+    assert(counts._2 === m1 && counts._3 === d1, "a warm walk resolves nothing")
+    assert(vt.countRows(spark) === 43)
+  }
+
   test("stats skipping, time travel and COW rewrites work through manifests") {
     val vt = VersionedTable.create(Tables.scratch("mf_cow"))
     def part(lo: Int) = (lo until lo + 50).map(i => (i.toLong, s"v$i"))

@@ -235,14 +235,22 @@ class SourcesUnitSpec extends AnyFunSuite {
   }
 
   test("BoundedCache: hard cap with LRU eviction; recently-used roots survive") {
-    val c = new BoundedCache[String, Int](3)
+    // the one cache class (graft.vt) also backs the schema cache here
+    val c = new graft.vt.BoundedCache[String, Int](3)
     (1 to 3).foreach(i => c.put(s"r$i", i))
     assert(c.size === 3)
-    c.get("r1") // refresh r1's recency: r2 is now the eldest
+    c.peek("r1") // refresh r1's recency: r2 is now the eldest
     c.put("r4", 4)
     assert(c.size === 3, "the cap is hard — inserting past it evicts")
     assert(!c.contains("r2"), "least-recently-USED is evicted")
     assert(c.contains("r1") && c.contains("r3") && c.contains("r4"))
+    // every lookup counts: one hit so far, then a miss that loads once
+    assert((c.hits, c.misses) === ((1L, 0L)))
+    var loads = 0
+    assert(c.get("r2") { loads += 1; 2 } === 2)
+    assert(c.get("r2") { loads += 1; -1 } === 2, "a cached value is never reloaded")
+    assert(loads === 1 && (c.hits, c.misses) === ((2L, 1L)))
+    assert(c.size === 3 && !c.contains("r3"), "the load evicted the eldest")
     // the schema cache is an instance of this with a per-JVM cap
     assert(graft.sources.DeltaChanges.SchemaCacheCap === 64)
   }

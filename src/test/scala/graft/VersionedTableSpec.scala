@@ -316,6 +316,26 @@ class VersionedTableSpec extends SparkSpec {
         h.copy(rowCounts = Map.empty, manifests = Vector.empty)))
     assert(vt.head("main").get.rowCounts.isEmpty)
     assert(vt.countRows(spark) === 4, "scan fallback must agree")
+
+    // a branch whose name needs URI escaping: its files live under
+    // `dev x-v…/`, and the DV parquet stores the ESCAPED key
+    // (`dev%20x-v…/part-…`) that `_metadata.file_path` carries
+    val esc = freshVt("count_meta_escaped")
+    esc.write(Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("k", "v"), "main", "v0")
+    esc.createBranch("dev x")
+    esc.write(Seq((5, "e"), (6, "f")).toDF("k", "v").coalesce(1), "dev x", "v1",
+      mode = "append")
+    esc.deleteWithVectors(spark, "k = 5", "dev x")
+    esc.merge("dev x", "main")
+    def ks = esc.read(spark, "main").select("k").as[Int].collect().sorted.toSeq
+    assert(ks === Seq(1, 2, 3, 4, 6))
+    assert(esc.countRows(spark) === 5, "the escaped-key DV must be subtracted")
+    // copy-on-write DML maps the scan's escaped keys back to commit paths
+    esc.update(spark, "k = 6", Map("v" -> "'z'"))
+    assert(esc.countRows(spark) === 5)
+    esc.delete(spark, "k = 6")
+    assert(ks === Seq(1, 2, 3, 4))
+    assert(esc.countRows(spark) === 4)
   }
 
   test("countRows dedups DV entries duplicated across merged branches") {

@@ -758,6 +758,25 @@ class VtCatalogSpec extends SparkSpec {
       === (4L to 100L).count(_ % 10 != 0).toLong)
   }
 
+  test("MOR deletes on a branch whose name needs URI escaping: SQL rows and COUNT(*) apply them") {
+    registerCatalog()
+    val vt = VersionedTable.create(Tables.scratch("vtcat_mor_escaped"))
+    vt.write((1L to 4L).toDF("k"), "main", "v0")
+    vt.createBranch("dev x")
+    vt.write(Seq(5L, 6L).toDF("k").coalesce(1), "dev x", "v1", mode = "append")
+    vt.deleteWithVectors(spark, "k = 5", "dev x")
+    vt.merge("dev x", "main")
+    val t = s"vt.`${vt.root}`"
+    val live = Array(1L, 2L, 3L, 4L, 6L)
+    assert(vt.read(spark, "main").select("k").as[Long].collect().sorted === live)
+    assert(spark.sql(s"SELECT k FROM $t").as[Long].collect().sorted === live)
+    assert(spark.sql(s"SELECT k FROM vt.`dev x@${vt.root}`").as[Long].collect().sorted
+      === live)
+    assert(spark.sql(s"SELECT count(*) AS c FROM $t").as[Long].head() === 5L)
+    assert(spark.sql(s"SELECT max(k) AS m FROM $t").as[Long].head() === 6L)
+    assert(spark.sql(s"SELECT count(*) AS c FROM $t WHERE k > 3").as[Long].head() === 2L)
+  }
+
   test("utility SQL r18: 3-ary ZORDER prunes every dimension, VACUUM HOURS DRY RUN, SHOW TAGS, DESCRIBE DETAIL") {
     registerCatalog()
     import graft.sources.VtUtilitySql
